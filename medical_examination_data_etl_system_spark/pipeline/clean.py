@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from medical_examination_data_etl_system_spark.operators.cache import persist_tracked
-
+from medical_examination_data_etl_system_spark.pipeline.ingest import batch_position
 from medical_examination_data_etl_system_spark.schemas import (
     FULLWIDTH_SRC,
     HALFWIDTH_DST,
@@ -122,11 +122,11 @@ def postprocess_multilang(df: DataFrame) -> DataFrame:
     # O1 (reference :75): stable sort by (RECORD_ID, GROUPNO, TCNAME_ITEM)
     # — stability == ord tiebreak. Rather than a global sort (single
     # range-partitioned stage whose only consumer is per-record grouping),
-    # re-derive ord within each record; renderers and sinks order by it.
-    # rec_ord preserves each record's batch position (its first row's
+    # re-derive ord within each record; the renderer and sinks order by it.
+    # rec_ord is each record's batch position (read off its first row's
     # pre-sort ord) so the final output can be returned in request order.
     w_rec = Window.partitionBy("RECORD_ID")
-    df = df.withColumn("rec_ord", F.min("ord").over(w_rec))
+    df = df.withColumn("rec_ord", batch_position(F.min("ord").over(w_rec)))
     w_sort = Window.partitionBy("RECORD_ID").orderBy("GROUPNO", "TCNAME_ITEM", "ord")
     df = df.withColumn("ord", F.row_number().over(w_sort))
     return df

@@ -24,11 +24,21 @@ from pyspark.sql import functions as F
 
 from medical_examination_data_etl_system_spark.schemas import BATCH_SCHEMA, RECORD_SCHEMA
 
-# ord = (_rec_idx << 40) | (item_pos << 20) | finding_pos.
-# Caps: 2^20 (~1M) items per record, 2^20 findings per item, 2^23 (~8M)
-# records per ingest batch. A batch is one API request — far below caps.
-_ITEM_SHIFT = 1 << 40
-_FINDING_SHIFT = 1 << 20
+# ord = (_rec_idx << 40) | (item_pos << 20) | finding_pos: batch position,
+# then encounter order inside the record. Every field must fit its bits,
+# so inputs past a cap are rejected rather than given colliding ords:
+# records_to_df raises past 2^23 records per batch (a larger _rec_idx
+# overflows the long) and flatten raises past 2^20 items per record or
+# 2^20 findings per item (a larger position bleeds into the next field).
+_REC_SHIFT = 40
+_ITEM_SHIFT = 20
+_MAX_BATCH = 1 << 23
+_MAX_POSITIONS = 1 << 20
+
+
+def batch_position(ord_col: F.Column) -> F.Column:
+    """The batch-position field of an ``ord`` value."""
+    return F.shiftright(ord_col, _REC_SHIFT)
 
 
 def records_to_df(spark: SparkSession, records: list[dict[str, Any]] | dict[str, Any]) -> DataFrame:
@@ -41,6 +51,8 @@ def records_to_df(spark: SparkSession, records: list[dict[str, Any]] | dict[str,
     """
     if isinstance(records, dict):
         records = [records]
+    if len(records) > _MAX_BATCH:
+        raise ValueError(f"{len(records)} records in one batch; at most {_MAX_BATCH} fit ord")
     rows = [
         {
             "_rec_idx": i,
@@ -61,29 +73,23 @@ def records_from_json_files(spark: SparkSession, path: str) -> DataFrame:
     The 100 TB path — ``records_to_df`` materializes a Python list on
     the driver (right for the API's request/response shape, wrong for
     bulk). Files are read with the explicit RECORD_SCHEMA (no inference,
-    SURVEY.md §1.2); the batch position ``_rec_idx`` — which the API path
-    pins by driver-side enumerate — is re-derived deterministically as a
-    dense rank over RECORD_ID, since files carry no meaningful row order.
+    SURVEY.md §1.2). Files carry no meaningful row order, so the records
+    get no batch position: ``flatten`` gives them ``_rec_idx`` 0 and
+    their reports come out in RECORD_ID order.
     """
-    raw = spark.read.schema(RECORD_SCHEMA).json(path)
-    from pyspark.sql import Window as W
-
-    # The unpartitioned window funnels record HEADERS (not findings)
-    # through one task — bounded by the ord bit-layout's 2^23-records-
-    # per-batch cap, so this is a small frame by construction; the heavy
-    # exploded data stays fully distributed.
-    return raw.withColumn(
-        "_rec_idx",
-        F.dense_rank().over(W.orderBy("RECORD_ID")).cast("long") - 1,
-    ).select(*[f.name for f in BATCH_SCHEMA.fields])
+    return spark.read.schema(RECORD_SCHEMA).json(path)
 
 
-def flatten(nested: DataFrame, drop_empty_comments: bool = True) -> DataFrame:
-    """Nested records → one row per (record, item, finding), with ``ord``.
+def flatten(nested: DataFrame) -> DataFrame:
+    """Nested records → one row per (record, item, finding) with a
+    non-empty comment, with ``ord``.
 
-    Output columns: RECORD_ID, LANG_NO, ORG_ID, ITEM_CODE, DIAG_CODE,
-    COMMENT, ord, request.
+    A frame without ``_rec_idx`` (file or stream records) gets batch
+    position 0 for every record. Output columns: RECORD_ID, LANG_NO,
+    ORG_ID, ITEM_CODE, DIAG_CODE, COMMENT, ord, request.
     """
+    if "_rec_idx" not in nested.columns:
+        nested = nested.withColumn("_rec_idx", F.lit(0).cast("long"))
     # Request echo (F8): reconstruct the original record JSON once, here.
     with_req = nested.withColumn(
         "request",
@@ -96,7 +102,7 @@ def flatten(nested: DataFrame, drop_empty_comments: bool = True) -> DataFrame:
         "LANG_NO",
         "ORG_ID",
         "request",
-        F.posexplode("ITEMS").alias("_item_pos", "_item"),
+        F.posexplode(_capped("ITEMS", "items per record")).alias("_item_pos", "_item"),
     )
     findings = items.select(
         "_rec_idx",
@@ -109,7 +115,9 @@ def flatten(nested: DataFrame, drop_empty_comments: bool = True) -> DataFrame:
         # posexplode_outer: an item with an empty FINDINGS list still
         # yields a (null-finding) row — pandas ``explode`` does the same;
         # the comment filter below then drops it, as in the reference.
-        F.posexplode_outer("_item.FINDINGS").alias("_finding_pos", "_finding"),
+        F.posexplode_outer(_capped("_item.FINDINGS", "findings per item")).alias(
+            "_finding_pos", "_finding"
+        ),
     )
     flat = findings.select(
         "RECORD_ID",
@@ -120,13 +128,19 @@ def flatten(nested: DataFrame, drop_empty_comments: bool = True) -> DataFrame:
         F.col("_finding.COMMENT").alias("COMMENT"),
         # _finding.SUMMARY_CODE intentionally dropped (J3 decision).
         (
-            F.col("_rec_idx") * F.lit(_ITEM_SHIFT)
-            + F.col("_item_pos") * F.lit(_FINDING_SHIFT)
+            F.shiftleft(F.col("_rec_idx"), _REC_SHIFT)
+            + F.shiftleft(F.col("_item_pos").cast("long"), _ITEM_SHIFT)
             + F.coalesce(F.col("_finding_pos"), F.lit(0))
         ).alias("ord"),
         "request",
     )
-    if drop_empty_comments:
-        # P1 (reference db_to_dataframe.py:41-44): null-safe trim-empty drop.
-        flat = flat.filter(F.trim(F.coalesce(F.col("COMMENT"), F.lit(""))) != "")
-    return flat
+    # P1 (reference db_to_dataframe.py:41-44): null-safe trim-empty drop.
+    return flat.filter(F.trim(F.coalesce(F.col("COMMENT"), F.lit(""))) != "")
+
+
+def _capped(array_col: str, what: str) -> F.Column:
+    """The array, or an error when its positions would not fit ord."""
+    return F.when(
+        F.size(array_col) > _MAX_POSITIONS,
+        F.raise_error(F.lit(f"more than {_MAX_POSITIONS} {what}; positions would collide in ord")),
+    ).otherwise(F.col(array_col))

@@ -17,12 +17,10 @@ def records_from_documents(docs: DataFrame, max_records: int | None = None) -> l
     record r ← docs with doc_id // 5 == r; items split doc ids by parity.
     LANG_NO cycles 1-4 by record index; comments are document texts.
     """
-    rows = (
-        docs.select("doc_id", "text")
-        .orderBy("doc_id")
-        .limit((max_records * 5) if max_records else 1 << 31)
-        .collect()
-    )
+    docs = docs.select("doc_id", "text").orderBy("doc_id")
+    if max_records:
+        docs = docs.limit(max_records * 5)
+    rows = docs.collect()
     records: dict[int, dict] = {}
     for row in rows:
         rid = row["doc_id"] // 5

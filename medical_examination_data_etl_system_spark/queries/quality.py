@@ -641,12 +641,10 @@ def _synth_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     summaries S5/S6 miss summary_tbl → F6 per-language defaults) and
     GROUPNO pathologies (I2→0, I4→null, both → A3 max+1 sentinel).
 
-    ``_rec_idx`` is 0 for every record — unlike the API path (driver
-    enumerate) and the JSON-file path (dense_rank), this caller needs no
-    cross-record component in ``ord``: record identity rides RECORD_ID
-    through every downstream partition (dedup key, re-rank window,
-    renderer grouping), so a per-record-constant index is valid and
-    avoids both the single-task header window and any bit-layout cap.
+    The records carry no ``_rec_idx``, so ``flatten`` gives each batch
+    position 0, as for file and stream records: record identity rides
+    RECORD_ID through every downstream partition (dedup key, re-rank
+    window, renderer grouping), so ``ord`` needs no cross-record part.
     Scale shape: two key-local aggregations build the nested records,
     flatten is map-side, all four dim joins broadcast."""
     from medical_examination_data_etl_system_spark.pipeline.enrich import enrich
@@ -709,7 +707,6 @@ def _synth_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("ITEMS"),
         )
         .select(
-            F.lit(0).cast("long").alias("_rec_idx"),
             F.col("okey").cast("string").alias("RECORD_ID"),
             (F.expr("okey div 4 % 4") + 1).cast("string").alias("LANG_NO"),
             F.lit("ORG_SYN").alias("ORG_ID"),

@@ -45,8 +45,10 @@ RECORD_SCHEMA = T.StructType(
     ]
 )
 
-# Ingest wraps RECORD_SCHEMA with a driver-assigned batch position so
-# "encounter order" is data, not physical row order (SURVEY.md §1.3).
+# The API ingest (records_to_df) wraps RECORD_SCHEMA with the request's
+# batch position so request order is data, not physical row order
+# (SURVEY.md §1.3). File and stream records carry none; flatten gives
+# them position 0.
 BATCH_SCHEMA = T.StructType(
     [T.StructField("_rec_idx", T.LongType(), False), *RECORD_SCHEMA.fields]
 )

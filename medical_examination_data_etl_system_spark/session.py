@@ -3,8 +3,8 @@
 One place to encode the engine's execution posture:
 - AQE on (runtime shuffle coalescing, skew-join splitting) — the 100 TB
   answer to skewed RECORD_ID / join keys.
-- Arrow on — every pandas-interop boundary (grouped-map renderer, LLM
-  mapInPandas stage) crosses via Arrow batches, not pickled rows.
+- Arrow on — every pandas-interop boundary (the LLM mapInPandas stage,
+  the grouped-map operators) crosses via Arrow batches, not pickled rows.
 - UTC session timezone — parity with DuckDB oracle timestamps.
 - shuffle partitions sized by env (local test: ~cores; cluster: the
   deployment overrides via spark-submit conf, these are defaults only).

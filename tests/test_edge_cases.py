@@ -1,7 +1,11 @@
 """Degenerate-input robustness: the engine must degrade gracefully
-(empty results), never throw, on inputs the reference would choke on."""
+(empty results), never throw, on inputs the reference would choke on.
+The one exception is input past the order key's documented caps, which
+must fail loudly rather than come out in the wrong order."""
 
 from __future__ import annotations
+
+import pytest
 
 from medical_examination_data_etl_system_spark.pipeline import process_records
 
@@ -47,6 +51,59 @@ def test_mixed_valid_and_degenerate_records(spark):
     ]
     out = process_records(spark, records).collect()
     assert [r["record_id"] for r in out] == [r["RECORD_ID"] for r in sample_request()]
+
+
+def test_order_key_caps_fail_loudly(spark):
+    """``ord`` packs batch, item and finding positions into one long.
+    Up to each cap the ords stay distinct; past it the input is rejected
+    instead of two findings sharing an ord."""
+    from pyspark.sql import functions as F
+
+    from medical_examination_data_etl_system_spark.pipeline.ingest import flatten, records_to_df
+
+    cap = 1 << 20
+    finding = F.struct(
+        F.lit("D1").alias("DIAG_CODE"), F.lit("c").alias("COMMENT"), F.lit("").alias("SUMMARY_CODE")
+    )
+
+    def record(items):
+        return spark.range(1).select(
+            F.lit(0).cast("long").alias("_rec_idx"),
+            F.lit("R1").alias("RECORD_ID"),
+            F.lit("1").alias("LANG_NO"),
+            F.lit("O1").alias("ORG_ID"),
+            items.alias("ITEMS"),
+        )
+
+    def item(findings):
+        return F.struct(F.lit("I1").alias("ITEM_CODE"), findings.alias("FINDINGS"))
+
+    def ords(nested):
+        return flatten(nested).agg(F.count("*").alias("n"), F.countDistinct("ord").alias("d")).first()
+
+    def findings_record(n):  # n findings on the first item, one on the second
+        return record(F.array(item(F.array_repeat(finding, n)), item(F.array(finding))))
+
+    assert tuple(ords(findings_record(cap))) == (cap + 1, cap + 1)
+    with pytest.raises(Exception, match="findings per item"):
+        ords(findings_record(cap + 1))
+    # Shifting an int item position by 20 bits overflows past 2^11 items.
+    many_items = 1 << 12
+    assert tuple(ords(record(F.array_repeat(item(F.array(finding)), many_items)))) == (
+        many_items,
+        many_items,
+    )
+    with pytest.raises(ValueError, match="records in one batch"):
+        records_to_df(spark, [{}] * ((1 << 23) + 1))
+
+
+def test_records_from_documents_without_limit(spark):
+    from medical_examination_data_etl_system_spark.pipeline.synthesize import records_from_documents
+
+    docs = spark.createDataFrame([(i, f"text {i}") for i in range(12)], "doc_id long, text string")
+    records = records_from_documents(docs)
+    assert [r["RECORD_ID"] for r in records] == ["R00000", "R00001", "R00002"]
+    assert sum(len(f["FINDINGS"]) for r in records for f in r["ITEMS"]) == 12
 
 
 def test_curation_temp_columns_survive_collision(spark):

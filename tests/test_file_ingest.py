@@ -18,7 +18,9 @@ from .fixtures import multilang_edge_batch
 
 
 def test_jsonl_ingest_matches_api_path(spark, tmp_path):
-    records = multilang_edge_batch()
+    # Request order differs from RECORD_ID order, so the two paths'
+    # order rules give different orders over the same reports.
+    records = multilang_edge_batch()[::-1]
     src = tmp_path / "records.jsonl"
     with open(src, "w", encoding="utf-8") as f:
         for r in records:
@@ -27,10 +29,11 @@ def test_jsonl_ingest_matches_api_path(spark, tmp_path):
     nested = records_from_json_files(spark, str(src))
     flat = flatten(nested)
     enriched = enrich(flat, fallback_dims(flat))
-    got = {r["record_id"]: r["report"] for r in reports_from_fact(enriched).collect()}
+    got = [(r["record_id"], r["report"]) for r in reports_from_fact(enriched).collect()]
+    want = [(r["record_id"], r["report"]) for r in process_records(spark, records).collect()]
 
-    want = {
-        r["record_id"]: r["report"] for r in process_records(spark, records).collect()
-    }
-    assert got == want
+    ids = [r["RECORD_ID"] for r in records]
+    assert [rid for rid, _ in got] == sorted(ids)  # file records: RECORD_ID order
+    assert [rid for rid, _ in want] == ids  # API batch: request order
+    assert dict(got) == dict(want)
     assert len(got) == len(records)

@@ -124,16 +124,36 @@ def test_salted_join_explodes_dim_not_fact(spark):
 
 
 def test_renderer_sql_has_no_python_eval(spark):
-    """The default renderer must contain no Python evaluation operator."""
-    import json
-
+    """The renderer must contain no Python evaluation operator."""
     from medical_examination_data_etl_system_spark.pipeline import process_records
 
-    recs = json.load(open("/root/reference/sample_request.json"))
-    df = process_records(spark, recs, renderer="sql")
+    from .fixtures import multilang_edge_batch
+
+    df = process_records(spark, multilang_edge_batch())
     plan = _formatted_plan(df)
     for marker in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
         assert marker not in plan, f"Python operator {marker} in sql-renderer plan"
+
+
+def test_file_ingest_has_no_global_window(spark, tmp_path):
+    """File records need no cross-record rank: flattening them must not
+    funnel the nested payload through one task."""
+    import json
+
+    from medical_examination_data_etl_system_spark.pipeline.ingest import (
+        flatten,
+        records_from_json_files,
+    )
+
+    from .fixtures import multilang_edge_batch
+
+    src = tmp_path / "records.jsonl"
+    src.write_text("".join(json.dumps(r) + "\n" for r in multilang_edge_batch()))
+    df = flatten(records_from_json_files(spark, str(src)))
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan
+    assert "Exchange SinglePartition" not in plan
 
 
 def test_embedding_near_dup_never_packs_blocks(spark):
